@@ -105,19 +105,20 @@ def run_mapreduce_to_dir(
     compared as an in-memory sorted line set).
 
     ``inputs`` may be an iterable of (filename, contents) pairs, or a
-    PATH GLOB string: the glob path reads through the ``wholetext`` data
-    source (sources/textfiles.py — one row AND one input partition per
-    file, the reference's map-task granularity), so file contents stream
-    from source tasks straight into map tasks with ZERO driver
-    materialization — input, shuffle, and output are all distributed,
-    the end-to-end 100 TB-safe parity path."""
+    PATH GLOB string: the glob is expanded on the driver (sorted; no match
+    raises ``FileNotFoundError``) and only the PATHS are parallelized, one
+    partition per file — the reference's map-task granularity. Each map
+    task reads its own file, decoded as the ``wholetext`` source decodes it
+    (sources/textfiles.py), so a retry re-reads one file and the driver
+    never holds file content: input, shuffle, and output are all
+    distributed, the end-to-end 100 TB-safe parity path."""
     sc = spark.sparkContext
     if isinstance(inputs, str):
-        from ..sources.textfiles import read_whole_text_source
+        from ..sources.pysources import expand_glob
+        from ..sources.textfiles import read_whole_file
 
-        # Row(file, content) -> (filename, contents); partitioning (one
-        # per file) carries through the DataFrame->RDD conversion.
-        rdd = read_whole_text_source(spark, inputs).rdd.map(tuple)
+        paths = expand_glob(inputs)
+        rdd = sc.parallelize(paths, numSlices=len(paths)).map(read_whole_file)
     else:
         files = list(inputs)
         rdd = sc.parallelize(files, numSlices=max(1, len(files)))

@@ -15,6 +15,21 @@ anyway.  A cluster deployment would set ``spark.checkpoint.dir`` to
 reliable storage and swap these call sites to ``checkpoint()`` (same
 plan-truncation effect, replicated blocks), or disable dynamic
 allocation for the stage; the per-operator docstrings assume this note.
+
+Python workers: ``get_spark`` starts them through ``worker_daemon``
+(``spark.python.daemon.module``). Spark puts ``pyspark.zip``, the py4j
+zip and the ``spark-core`` jar first on every worker's path, and on
+Python 3.11 each task's ``importlib.invalidate_caches()`` makes every
+zip importer re-read its archive: about 80 ms of worker CPU per task,
+even for a no-op. The daemon drops those archives, so workers import the
+unpacked pyspark the driver uses; a no-op task then costs about 10 ms
+(a 40-task no-op job on 4 cores: 1.0 s -> 0.56 s). It leaves the path
+alone unless an unpacked pyspark of the archive's version and an
+unpacked py4j are importable without them. The package root goes on the
+workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so the
+daemon and the package's pickled functions import from any working
+directory. Sessions not built here (e.g. a vanilla
+``SparkSession.builder`` one) keep Spark's default daemon.
 """
 
 from __future__ import annotations
@@ -24,6 +39,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER_DAEMON_MODULE = f"{__package__}.worker_daemon"
 
 
 def get_spark(
@@ -42,6 +59,7 @@ def get_spark(
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    worker_pythonpath = os.pathsep.join(p for p in (PACKAGE_ROOT, os.environ.get("PYTHONPATH")) if p)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -65,6 +83,8 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", worker_pythonpath)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -20,10 +20,11 @@ files should instead go through splittable ``spark.read.text``.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+from .pysources import expand_glob, register_data_source
 
 
 class WholeTextDataSource(DataSource):
@@ -55,18 +56,20 @@ class WholeTextReader(DataSourceReader):
         # One partition per file == the reference's map-task granularity.
         # Glob expansion happens once on the driver; only the file PATH is
         # shipped to executors, never the content.
-        files = sorted(_glob.glob(self._path))
-        if not files:
-            raise FileNotFoundError(f"no files match {self._path!r}")
-        return [InputPartition(p) for p in files]
+        return [InputPartition(p) for p in expand_glob(self._path)]
 
     def read(self, partition: InputPartition):
-        p = partition.value
-        with open(p, encoding="utf-8", errors="replace") as fh:
-            yield (os.path.basename(p), fh.read())
+        yield read_whole_file(partition.value)
+
+
+def read_whole_file(path: str) -> tuple[str, str]:
+    """One file as a ``(basename, text)`` record; bytes that are not
+    UTF-8 decode to U+FFFD."""
+    with open(path, encoding="utf-8", errors="replace") as fh:
+        return os.path.basename(path), fh.read()
 
 
 def read_whole_text_source(spark, path_glob: str):
-    """Register (idempotent) and read the wholetext source."""
-    spark.dataSource.register(WholeTextDataSource)
+    """Register (once per session) and read the wholetext source."""
+    register_data_source(spark, WholeTextDataSource)
     return spark.read.format("wholetext").load(path_glob)

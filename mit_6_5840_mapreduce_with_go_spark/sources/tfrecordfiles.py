@@ -19,10 +19,11 @@ same connector.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+from .pysources import expand_glob, register_data_source
 
 
 class TFRecordDataSource(DataSource):
@@ -48,10 +49,7 @@ class TFRecordReader(DataSourceReader):
         self._path = path
 
     def partitions(self) -> list[InputPartition]:
-        files = sorted(_glob.glob(self._path))
-        if not files:
-            raise FileNotFoundError(f"no files match {self._path!r}")
-        return [InputPartition(p) for p in files]
+        return [InputPartition(p) for p in expand_glob(self._path)]
 
     def read(self, partition: InputPartition):
         from ..operators.tfrecord import decode_tfrecord_frames
@@ -65,6 +63,6 @@ class TFRecordReader(DataSourceReader):
 
 
 def read_tfrecord_source(spark, path_glob: str):
-    """Register (idempotent) and read the tfrecordfile source."""
-    spark.dataSource.register(TFRecordDataSource)
+    """Register (once per session) and read the tfrecordfile source."""
+    register_data_source(spark, TFRecordDataSource)
     return spark.read.format("tfrecordfile").load(path_glob)

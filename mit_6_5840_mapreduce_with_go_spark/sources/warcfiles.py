@@ -31,10 +31,11 @@ second stage on.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+from .pysources import expand_glob, register_data_source
 
 
 class WarcDataSource(DataSource):
@@ -69,10 +70,7 @@ class WarcReader(DataSourceReader):
 
     def partitions(self) -> list[InputPartition]:
         # Glob expansion once on the driver; only paths ship to executors.
-        files = sorted(_glob.glob(self._path))
-        if not files:
-            raise FileNotFoundError(f"no files match {self._path!r}")
-        return [InputPartition(p) for p in files]
+        return [InputPartition(p) for p in expand_glob(self._path)]
 
     def read(self, partition: InputPartition):
         # Imported here (executor-side) to keep sources/ -> operators/
@@ -101,6 +99,6 @@ class WarcReader(DataSourceReader):
 
 
 def read_warc_source(spark, path_glob: str):
-    """Register (idempotent) and read the warcfile source."""
-    spark.dataSource.register(WarcDataSource)
+    """Register (once per session) and read the warcfile source."""
+    register_data_source(spark, WarcDataSource)
     return spark.read.format("warcfile").load(path_glob)

@@ -42,6 +42,8 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from .pysources import expand_glob, register_data_source
+
 # Python Data Source filter pushdown is gated by a session conf and
 # Spark REFUSES (DATA_SOURCE_PUSHDOWN_DISABLED) to plan a read of a
 # pushFilters-implementing source while it is off — a deliberate
@@ -242,9 +244,7 @@ class ZstReader(DataSourceReader):
                 )
 
     def partitions(self) -> list[InputPartition]:
-        files = sorted(_glob.glob(self._path))
-        if not files:
-            raise FileNotFoundError(f"no files match {self._path!r}")
+        files = expand_glob(self._path)
         if self._file_eq is not None:
             # shard-level pruning from the pushed file-equality filter:
             # an empty survivor set is a legitimate empty result (the
@@ -416,8 +416,8 @@ class ZstReader(DataSourceReader):
 
 
 def read_zst_source(spark, path_glob: str):
-    """Register (idempotent) and read the zstfile source."""
-    spark.dataSource.register(ZstDataSource)
+    """Register (once per session) and read the zstfile source."""
+    register_data_source(spark, ZstDataSource)
     _enable_pushdown(spark)
     return spark.read.format("zstfile").load(path_glob)
 
@@ -534,7 +534,7 @@ def read_zst_stream(
     path's I/O-proportional plans: Catalyst pushes filters to BATCH
     Python sources only, so the stream takes its predicates as options
     (honored by the same shared reader — stream == batch for a band)."""
-    spark.dataSource.register(ZstDataSource)
+    register_data_source(spark, ZstDataSource)
     _enable_pushdown(spark)
     r = spark.readStream.format("zstfile")
     if mode != "full":
@@ -662,7 +662,7 @@ def read_zst_meta(spark, path_glob: str):
     each shard's seek table, content bytes never read or decoded — the
     frame-census scan whose I/O is proportional to the table, not the
     corpus."""
-    spark.dataSource.register(ZstDataSource)
+    register_data_source(spark, ZstDataSource)
     _enable_pushdown(spark)
     return (
         spark.read.format("zstfile").option("mode", "meta").load(path_glob)
@@ -673,7 +673,7 @@ def read_zst_source_seekable(spark, path_glob: str, min_frame_bytes: int):
     """Register and read the zstfile source in PRUNING mode: only
     frames whose seek-table decompressed size is >= the threshold are
     decoded (the rest are never touched)."""
-    spark.dataSource.register(ZstDataSource)
+    register_data_source(spark, ZstDataSource)
     _enable_pushdown(spark)
     return (
         spark.read.format("zstfile")
@@ -1084,7 +1084,7 @@ def write_zst_sink(
     prepends shard names (monotonic epoch prefixes keep the streaming
     source's name-anchored exactly-once contract when composing sink
     and stream on one directory)."""
-    df.sparkSession.dataSource.register(ZstDataSource)
+    register_data_source(df.sparkSession, ZstDataSource)
     _enable_pushdown(df.sparkSession)
     (
         df.write.format("zstfile")

@@ -134,3 +134,66 @@ def test_wholetext_glob_path_matches_iterable_path(retry_spark, tmp_path):
     run_mapreduce_to_dir(retry_spark, wc_map, wc_reduce, str(data_dir / "*.txt"), d1)
     run_mapreduce_to_dir(retry_spark, wc_map, wc_reduce, pairs, d2)
     assert read_out(d1) == read_out(d2) == run_mapreduce_sequential(wc_map, wc_reduce, pairs)
+
+
+def _write_corpus(data_dir, n: int) -> None:
+    data_dir.mkdir()
+    for i in range(n):
+        (data_dir / f"f{i}.txt").write_text(f"alpha beta {'gamma ' * (i + 1)}", encoding="utf-8")
+
+
+def test_glob_path_runs_one_map_task_per_file(retry_spark, tmp_path):
+    from mit_6_5840_mapreduce_with_go_spark.mapreduce import run_mapreduce_to_dir
+
+    _write_corpus(tmp_path / "in", 5)
+    sc = retry_spark.sparkContext
+    group = "glob-one-map-task-per-file"
+    sc.setJobGroup(group, "engine glob path")
+    try:
+        run_mapreduce_to_dir(
+            retry_spark, wc_map, wc_reduce, str(tmp_path / "in" / "*.txt"), str(tmp_path / "out"), n_reduce=3
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    [job] = tracker.getJobIdsForGroup(group)
+    tasks = sorted(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(job).stageIds)
+    # one map task per file (5), one reduce task per bucket (3)
+    assert tasks == [3, 5]
+
+
+def test_glob_path_without_matches_raises(retry_spark, tmp_path):
+    from mit_6_5840_mapreduce_with_go_spark.mapreduce import run_mapreduce_to_dir
+
+    with pytest.raises(FileNotFoundError, match="no files match"):
+        run_mapreduce_to_dir(retry_spark, wc_map, wc_reduce, str(tmp_path / "none-*.txt"), str(tmp_path / "out"))
+
+
+def test_glob_path_decodes_invalid_utf8_like_wholetext(retry_spark, tmp_path):
+    import os
+
+    from mit_6_5840_mapreduce_with_go_spark.mapreduce import run_mapreduce_to_dir
+    from mit_6_5840_mapreduce_with_go_spark.sources import read_whole_text_source
+
+    data_dir = tmp_path / "in"
+    data_dir.mkdir()
+    (data_dir / "bad.txt").write_bytes(b"alpha \xff\xfe beta \xe9t\xe9 \xc3")
+    (data_dir / "good.txt").write_bytes("café ok".encode("utf-8"))
+    pattern = str(data_dir / "*.txt")
+
+    def echo_map(filename: str, contents: str):
+        return [(filename, ascii(contents))]
+
+    def first_reduce(key: str, values: list[str]) -> str:
+        return values[0]
+
+    out_dir = str(tmp_path / "out")
+    run_mapreduce_to_dir(retry_spark, echo_map, first_reduce, pattern, out_dir, n_reduce=2)
+    got = []
+    for part in sorted(os.listdir(out_dir)):
+        if part.startswith("part-"):
+            with open(os.path.join(out_dir, part), encoding="utf-8") as fh:
+                got.extend(ln.rstrip("\n") for ln in fh if ln.strip())
+    rows = read_whole_text_source(retry_spark, pattern).collect()
+    assert any("\ufffd" in r["content"] for r in rows)
+    assert sorted(got) == sorted(f"{r['file']} {ascii(r['content'])}" for r in rows)

@@ -59,3 +59,20 @@ def test_wordcount_totals_match_python(spark):
     ) as fh:
         n_py = len([w for w in re.split(r"[\W\d_]+", fh.read()) if w])
     assert n_spark == n_py
+
+
+def test_source_registers_once_per_session(spark, tmp_path, monkeypatch):
+    """Re-registering a Python data source makes Spark log a warning, so
+    the readers register each source once per session."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    register = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration, "register", lambda self, cls: calls.append(cls.name()) or register(self, cls)
+    )
+    (tmp_path / "a.txt").write_text("alpha", encoding="utf-8")
+    for _ in range(3):
+        assert read_whole_text_source(spark, str(tmp_path / "*.txt")).count() == 1
+    # none when an earlier test already registered it with this session
+    assert calls in ([], ["wholetext"])
